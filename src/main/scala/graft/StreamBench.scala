@@ -23,32 +23,34 @@ import graft.pipeline._
   */
 object StreamBench {
 
-  /** One published streaming row. `medianCleanSec`/`rowsPerSecClean`
-    * are medians over the trials NOT flagged by the spike detector (the
-    * headline numbers); `trialsSec` carries every wall actually used
-    * (spiked trials already replaced by their re-runs); `spikedJson`
-    * records each detected eruption — original wall, its commit_ms, and
-    * the replacement wall — so the artifact adjudicates itself
-    * (VERDICT r10 #1). `wallRerunJson` records evidence-CLEAN wall
-    * eruptions (≥3× row min, commit + calibration both quiet) that were
-    * mechanically re-run once under a distinct key — kept separate from
-    * `spikedJson` so the evidence discipline stays auditable — and
-    * `wallOutliers` counts trials still >2× the row min in the final
-    * vector with no exclusion marker (the class VERDICT r12 #1 found
-    * invisible to both mechanisms). */
-  final case class RowOut(name: String, medianCleanSec: Double,
-      trialsSec: Seq[Double], rowsPerSecClean: Double,
+  /** One published streaming row: the plain median over every trial
+    * (`medianSec`, `rowsPerSec`) plus each trial's wall and sustained
+    * rate, so the spread stays readable from the artifact. */
+  final case class RowOut(name: String, medianSec: Double,
+      trialsSec: Seq[Double], rowsPerSec: Double,
       trialsRps: Seq[Double],
-      latency: (Long, Long), provider: String, stateJson: String,
-      spikedJson: String, wallRerunJson: String, wallOutliers: Int)
+      latency: (Long, Long), provider: String, stateJson: String)
 
   /** `extra` = additional top-level artifact keys (name -> rendered JSON
     * value) a row rig wants published alongside its RowOut — e.g. the
     * recovery row's per-trial kill/restart/verify detail. Bench splices
     * them into bench_out.json verbatim. */
   final case class Out(rows: Seq[RowOut], failed: Seq[String],
-      roundCal: Seq[(Int, Double)],
       extra: Seq[(String, String)] = Nil)
+
+  /** The rows [[run]] replays from the staged events table. */
+  private[graft] val EventRowNames: Seq[String] =
+    Seq("stream_stateless", "stream_statecomp", "stream_market_spread",
+      "stream_sliding", "stream_countwin", "stream_ephemeral",
+      "stream_two_stage", "stream_topk", "stream_session",
+      "stream_statecomp_tws", "stream_sliding_tws",
+      "stream_session_rocksdb", "stream_market_spread_rocksdb",
+      "stream_recovery")
+
+  /** Every row a default [[run]] publishes; registering any other name
+    * fails, so this list is the pack's row registry. */
+  private[graft] val RowNames: Seq[String] = EventRowNames ++
+    Seq("stream_market_spread_wire", "stream_neardup", "stream_ann")
 
   /** Standalone entry for iterating on streaming throughput without
     * paying for the batch bench. */
@@ -58,15 +60,10 @@ object StreamBench {
     val out = run(spark, sfDir)
     out.rows.foreach { r =>
       val spread = r.trialsSec.map(t => f"$t%.2f").mkString("/")
-      val spiked = if (r.spikedJson == "[]") "" else s"  spiked=${r.spikedJson}"
-      val wallRr = if (r.wallRerunJson == "[]") "" else s"  wall_rerun=${r.wallRerunJson}"
-      val outl = if (r.wallOutliers == 0) "" else s"  wall_outliers=${r.wallOutliers}"
-      println(f"[stream] ${r.name}%-22s ${r.medianCleanSec}%7.2f s  (trials $spread)  ${r.rowsPerSecClean.round}%9d rows/s  batch p50/max ${r.latency._1}%5d/${r.latency._2}%5d ms  [${r.provider}] state=${r.stateJson}$spiked$wallRr$outl")
+      println(f"[stream] ${r.name}%-22s ${r.medianSec}%7.2f s  (trials $spread)  ${r.rowsPerSec.round}%9d rows/s  batch p50/max ${r.latency._1}%5d/${r.latency._2}%5d ms  [${r.provider}] state=${r.stateJson}")
     }
     out.failed.foreach(n => println(s"[stream] $n FAILED (see stderr)"))
     out.extra.foreach { case (k, v) => println(s"[stream] $k=$v") }
-    println("[stream] round calibration: " +
-      out.roundCal.map { case (r, s) => f"r$r=$s%.2f s" }.mkString(" "))
     spark.stop()
   }
 
@@ -256,7 +253,7 @@ object StreamBench {
     // iterate-on-one-pipeline loop, mirroring GRAFT_BENCH_ONLY.
     // `onlyOverride` is the programmatic form: Bench's standalone wire
     // reading (VERDICT r13 #2) re-enters here for one isolated row after
-    // the full pack, same staging/teardown/spike discipline.
+    // the full pack, same staging and teardown.
     val streamOnly = onlyOverride.orElse(sys.env.get("GRAFT_STREAM_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet))
     def wanted(name: String): Boolean = streamOnly.forall(_.contains(name))
@@ -285,15 +282,8 @@ object StreamBench {
     // JIT cost, and the per-batch fixed costs (offset/commit-log fsyncs,
     // state-store commit latency) amortize the way a throughput-tuned
     // deployment would size its triggers.
-    val eventRowNames =
-      Seq("stream_stateless", "stream_statecomp", "stream_market_spread",
-        "stream_sliding", "stream_countwin", "stream_ephemeral",
-        "stream_two_stage", "stream_topk", "stream_session",
-        "stream_statecomp_tws", "stream_sliding_tws",
-        "stream_session_rocksdb", "stream_market_spread_rocksdb",
-        "stream_recovery")
     val evStaged: Option[(String, Double)] =
-      if (!eventRowNames.exists(wanted)) None
+      if (!EventRowNames.exists(wanted)) None
       else try {
         val staged = newStagedDir("graft_stream_src")
         stagedDirs += staged
@@ -347,22 +337,6 @@ object StreamBench {
       (r: Row) => r.getLong(2),
       maxFilesPerTrigger = 32)
 
-    // STREAM_BENCH_PROVIDER=rocksdb benches the disk-spilling provider a
-    // large deployment runs (changelog checkpointing keeps the per-batch
-    // commit an append, not a full SST upload).
-    // STREAM_BENCH_HOST=tws benches the transformWithState host
-    // (WrapperProcessor, real per-key timers) — implies RocksDB (a Spark
-    // restriction on that API); the identical provider confs keep the
-    // PROVIDER=rocksdb and HOST=tws rows comparable.
-    val twsHost = sys.env.get("STREAM_BENCH_HOST").contains("tws")
-    if (twsHost) spark.conf.set("graft.streaming.stateHost", "transformWithState")
-    if (twsHost || sys.env.get("STREAM_BENCH_PROVIDER").contains("rocksdb")) {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    }
-
     // Sustained rate = input rows / micro-batch execution time, summed
     // over the query's progress events — excludes the fixed query
     // startup/teardown (planning, file listing, checkpoint dir setup)
@@ -413,7 +387,7 @@ object StreamBench {
         }
       }.getOrElse((0L, 0L, 0L))
 
-    def trial(name: String)(build: SourceConfig[(Long, Long, Long)] => Pipeline[_]): (Double, Double, (Long, Long), (Long, Long, Long)) = {
+    def trial(build: SourceConfig[(Long, Long, Long)] => Pipeline[_]): (Double, Double, (Long, Long), (Long, Long, Long)) = {
       val t0 = System.nanoTime()
       val handle = build(source()) match {
         case p: Pipeline[t] => p.toSink(EmptySink[t](),
@@ -421,8 +395,6 @@ object StreamBench {
       }
       handle.awaitTermination()
       val sec = (System.nanoTime() - t0) / 1e9
-      if (sys.env.contains("STREAM_BENCH_DEBUG"))
-        handle.query.foreach(_.recentProgress.foreach(p => System.err.println(s"[$name] ${p.json}")))
       val (sustained, latency) = sustainedOf(handle.query, nRows, sec)
       (sec, sustained, latency, stateOf(handle.query))
     }
@@ -623,9 +595,6 @@ object StreamBench {
           trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
       handle.awaitTermination()
       val sec = (System.nanoTime() - t0) / 1e9
-      if (sys.env.contains("STREAM_BENCH_DEBUG"))
-        handle.query.foreach(_.recentProgress.foreach(p =>
-          System.err.println(s"[stream_ann] ${p.json}")))
       val (sustained, latency) = sustainedOf(handle.query, nAnnRows, sec)
       (sec, sustained, latency, stateOf(handle.query))
     }
@@ -1054,8 +1023,7 @@ object StreamBench {
     // discounts one trial of each row instead of all three of one row;
     // each row reports the componentwise MEDIAN over
     // GRAFT_STREAM_REPEATS trials (default 3) PLUS the per-trial wall
-    // seconds, so the published JSON shows the spread a reader needs to
-    // adjudicate a regression without a re-run.
+    // seconds, so the published JSON shows the spread.
     // `repeatsOverride` widens a programmatic re-entry beyond the env
     // default — Bench's standalone wire reading runs 5 trials (VERDICT
     // r14 #6: a 3-trial median was one 12 s eruption away from flipping
@@ -1069,8 +1037,10 @@ object StreamBench {
     val rowDefs = scala.collection.mutable.ArrayBuffer
       .empty[(String, String, Seq[(String, String)], () => Trial)]
     def register(name: String, provider: String,
-        confs: Seq[(String, String)] = Nil)(runTrial: () => Trial): Unit =
+        confs: Seq[(String, String)] = Nil)(runTrial: () => Trial): Unit = {
+      require(RowNames.contains(name), s"$name is not in StreamBench.RowNames")
       if (wanted(name)) rowDefs += ((name, provider, confs, runTrial))
+    }
 
     def statecomp(src: SourceConfig[(Long, Long, Long)]) =
       Graft.source("bench-statecomp", src)
@@ -1252,16 +1222,10 @@ object StreamBench {
             FramedSocketSource("127.0.0.1", srv.getLocalPort, SpreadWireDecoder(1L),
               maxFramesPerTrigger = perTrigger))
         }
-        val merged = legs.reduce(_ merge _)
-        // diagnostic toggle (not a published row): STREAM_WIRE_STATELESS=1
-        // drops the keyed stage so the scan/decode half prices alone
-        val handle = (if (sys.env.contains("STREAM_WIRE_STATELESS"))
-            merged.filter(_._4 >= 0)
-          else merged
-            .keyBy(_._3.toString)
-            .to(graft.operators.PipelineQueries.MarketCheck)(spreadOutEnc)) match {
-            case p: Pipeline[t] => p.toSink(EmptySink[t]())
-          }
+        val handle = legs.reduce(_ merge _)
+          .keyBy(_._3.toString)
+          .to(graft.operators.PipelineQueries.MarketCheck)(spreadOutEnc)
+          .toSink(EmptySink[(Long, Long, Long, Long, Boolean)]())
         handleOpt = Some(handle)
         // this trial's query id — events from any other query (including
         // a stopped prior trial's stragglers) never count toward it
@@ -1279,9 +1243,6 @@ object StreamBench {
         require(seenRows() >= expected,
           s"wire legs processed ${seenRows()} of $expected rows before timeout")
         val sec = (System.nanoTime() - t0) / 1e9
-        if (sys.env.contains("STREAM_BENCH_DEBUG"))
-          handle.query.foreach(_.recentProgress.foreach(p =>
-            System.err.println(s"[msw] ${p.json}")))
         val (sustained, latency) = sustainedOf(handle.query, expected.toDouble, sec)
         val st = stateOf(handle.query)
         (sec, sustained, latency, st)
@@ -1350,43 +1311,32 @@ object StreamBench {
 
     // Provider label per row (ADVICE r3): host+provider, so the published
     // JSON can't be misread as a host-only comparison when the base rows
-    // run HDFS-backed and the _tws rows run RocksDB.
-    val baseStore =
-      if (twsHost || sys.env.get("STREAM_BENCH_PROVIDER").contains("rocksdb")) "rocksdb"
-      else "hdfs"
-    val baseProvider = (if (twsHost) "tws" else "fmgws") + "+" + baseStore
-    // the session rows ride Spark's native session_window aggregation,
-    // not a graft keyed host — label the host half accordingly so the
-    // artifact can't be read as an fmgws comparison
-    val sessionProvider = "native+" + baseStore
+    // run HDFS-backed and the _tws rows run RocksDB. The session rows ride
+    // Spark's native session_window aggregation, not a graft keyed host.
+    val baseProvider = "fmgws+hdfs"
+    val sessionProvider = "native+hdfs"
 
     // An events/documents staging failure skips that table's pipelines —
     // each is recorded individually in `failed` so the JSON shows exactly
     // which rows are missing and why the bench is partial.
+    if (evStaged.isEmpty) failed ++= EventRowNames.filter(wanted)
     if (evStaged.isDefined) {
       register("stream_stateless", baseProvider) { () =>
-        trial("stream_stateless") { src =>
+        trial { src =>
           Graft.source("bench-stateless", src)
             .filter(_._2 >= 100)
             .map(e => (e._1, e._2 * 2, e._3))
         }
       }
-      register("stream_statecomp", baseProvider)(() => trial("stream_statecomp")(statecomp))
-      register("stream_market_spread", baseProvider)(() =>
-        trial("stream_market_spread")(_ => marketSpread()))
-      register("stream_sliding", baseProvider)(() => trial("stream_sliding")(sliding))
-      register("stream_countwin", baseProvider)(() => trial("stream_countwin")(countwin))
-      register("stream_ephemeral", baseProvider)(() => trial("stream_ephemeral")(ephemeral))
+      register("stream_statecomp", baseProvider)(() => trial(statecomp))
+      register("stream_market_spread", baseProvider)(() => trial(_ => marketSpread()))
+      register("stream_sliding", baseProvider)(() => trial(sliding))
+      register("stream_countwin", baseProvider)(() => trial(countwin))
+      register("stream_ephemeral", baseProvider)(() => trial(ephemeral))
       register("stream_two_stage", baseProvider)(() => twoStageTrial())
       register("stream_topk", baseProvider)(() => topkTrial())
       register("stream_session", sessionProvider)(() => sessionTrial())
-    } else failed ++= eventRowNames.filter(n =>
-      wanted(n) && !n.endsWith("_tws") &&
-        // a provider-pinned run never registers the _rocksdb duplicates
-        // (the base rows already run RocksDB) — marking them failed here
-        // would claim rows missing that a SUCCESSFUL pinned run would
-        // not have produced either
-        !(baseStore == "rocksdb" && n.endsWith("_rocksdb")))
+    }
     // the wire row stages its own frame log (no dependence on evStaged)
     wireFramesOpt match {
       case Some(frames) =>
@@ -1405,28 +1355,16 @@ object StreamBench {
     // The same stateful pipelines on the transformWithState host —
     // reported side by side so the per-round JSON carries both hosts'
     // sustained rates. The _tws rows are tws+RocksDB (a Spark restriction
-    // on that API); the base rows use whatever provider the run is
-    // configured with (HDFS-backed by default), so in a default run the
-    // pair differs in host AND provider — the per-row provider label in
-    // the JSON makes that visible; set STREAM_BENCH_PROVIDER=rocksdb for
-    // a host-only comparison. Skipped when STREAM_BENCH_HOST already
-    // pinned the whole run to tws. Confs apply per-trial (interleaved
-    // with the default-host rows).
+    // on that API) while the base rows run HDFS-backed, so the pair
+    // differs in host AND provider — the per-row provider label in the
+    // JSON makes that visible, and the _rocksdb rows below price the
+    // provider alone. Confs apply per-trial (interleaved with the
+    // default-host rows).
     val twsConfs = Seq(
       "graft.streaming.stateHost" -> "transformWithState",
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
-    if (!twsHost) {
-      if (evStaged.isDefined) {
-        register("stream_statecomp_tws", "tws+rocksdb", twsConfs)(() =>
-          trial("stream_statecomp_tws")(statecomp))
-        register("stream_sliding_tws", "tws+rocksdb", twsConfs)(() =>
-          trial("stream_sliding_tws")(sliding))
-      } else failed ++=
-        eventRowNames.filter(n => wanted(n) && n.endsWith("_tws"))
-    }
-
     // RocksDB variants of the two DEEPEST-state rows (VERDICT r10 #4):
     // the 100 TB deployment story lives on RocksDB, but only the two
     // _tws rows exercised it — and those change host AND provider at
@@ -1436,30 +1374,24 @@ object StreamBench {
     // same replay), so base vs _rocksdb prices the provider at equal
     // topology: stream_session carries the widest live-key state in the
     // pack (one session window per user) and stream_market_spread the
-    // full keyed reject topology. Skipped when the whole run is already
-    // pinned to RocksDB (they would duplicate the base rows).
+    // full keyed reject topology.
     val rocksConfs = Seq(
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
-    if (!twsHost && !sys.env.get("STREAM_BENCH_PROVIDER").contains("rocksdb")) {
-      if (evStaged.isDefined) {
-        register("stream_session_rocksdb", "native+rocksdb", rocksConfs)(() =>
-          sessionTrial())
-        register("stream_market_spread_rocksdb", "fmgws+rocksdb", rocksConfs)(() =>
-          trial("stream_market_spread_rocksdb")(_ => marketSpread()))
-      } else failed ++=
-        eventRowNames.filter(n => wanted(n) && n.endsWith("_rocksdb"))
-    }
-
-    // The crash/recover row always pins its own provider (RocksDB +
-    // changelog — the deployment recovery path) and host (fmgws) per
-    // trial, so it registers regardless of how the run is pinned; a
-    // staging failure is already marked by the eventRowNames fallback.
-    if (evStaged.isDefined)
+    if (evStaged.isDefined) {
+      register("stream_statecomp_tws", "tws+rocksdb", twsConfs)(() => trial(statecomp))
+      register("stream_sliding_tws", "tws+rocksdb", twsConfs)(() => trial(sliding))
+      register("stream_session_rocksdb", "native+rocksdb", rocksConfs)(() =>
+        sessionTrial())
+      register("stream_market_spread_rocksdb", "fmgws+rocksdb", rocksConfs)(() =>
+        trial(_ => marketSpread()))
+      // The crash/recover row pins its own provider (RocksDB + changelog —
+      // the deployment recovery path) and host (fmgws) per trial.
       register("stream_recovery", "fmgws+rocksdb",
         rocksConfs :+ ("graft.streaming.stateHost" -> "flatMapGroups"))(
         () => recoveryTrial())
+    }
 
     // Untimed streaming warmup (the stream-pack analogue of Bench's
     // batch warmup): pay the one-time streaming-engine costs — offset/
@@ -1507,27 +1439,6 @@ object StreamBench {
     val collected = scala.collection.mutable.LinkedHashMap[String, Vector[Trial]](
       rowDefs.map(r => r._1 -> Vector.empty[Trial]).toSeq: _*)
     val dead = scala.collection.mutable.Set.empty[String]
-    // Round-boundary calibration (the stream phase's answer to the batch
-    // pack's calibration_series, which stops sampling before the stream
-    // rows run): the SAME fixed CPU+shuffle kernel, median of 3 shots,
-    // taken before round 1 and after every round. A host-contention
-    // window that inflates a contiguous stretch of trials — the shape
-    // every flagged "regression" since r7 has resolved to — now shows up
-    // as a riser in the bracketing samples, so a slow round is
-    // adjudicatable from the artifact alone, as batch rows have been
-    // since r6.
-    def calOnce(): Double = {
-      import org.apache.spark.sql.functions.{avg, expr, max, sum}
-      val t0 = System.nanoTime()
-      spark.range(1L << 26).selectExpr("id % 1024 as k", "id as v")
-        .groupBy("k").agg(sum("v"), avg("v"), max(expr("xxhash64(v)")))
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    def calSample(): Double = {
-      val xs = (1 to 3).map(_ => calOnce()).sorted
-      xs(1)
-    }
     // The FULL teardown also runs before the first timed trial
     // (VERDICT r10 #1a): the warmup queries above leave their own cached
     // providers, and the batch pack + staging writes leave writeback
@@ -1535,7 +1446,6 @@ object StreamBench {
     // row could still absorb the provider-unload + flush the driver's
     // environment had accumulated.
     teardown()
-    val roundCal = scala.collection.mutable.ArrayBuffer[(Int, Double)]((0, calSample()))
     for (r <- 1 to repeats) {
       for ((name, _, confs, runTrial) <- rowDefs if !dead(name)) {
         try collected(name) = collected(name) :+ withConfs(confs)(runTrial())
@@ -1545,172 +1455,33 @@ object StreamBench {
         }
         teardown()
       }
-      roundCal += ((r, calSample()))
-    }
-    // --- Self-defending spike pass (VERDICT r10 #1) -------------------
-    // Three rounds of judges adjudicated driver-context eruptions by
-    // hand from the telemetry; this pass applies the same evidence
-    // MECHANICALLY. A trial is SPIKED when its wall is > 2× the row's
-    // min AND either (a) its commit_ms is > 2× the median of the row's
-    // sibling trials (the state-store/writeback stall signature) or
-    // (b) a round-boundary calibration sample bracketing it rose
-    // > 1.5× the series median (a whole-host contention window). Each
-    // spiked trial is re-run ONCE — after a full teardown, so the
-    // replacement starts from the same settled state as a clean trial —
-    // and the original wall + commit_ms + replacement wall are
-    // published under the row's `spiked` key. Headline numbers are
-    // median_clean: the median over trials not still flagged after
-    // replacement (a replacement that erupts again stays excluded; if
-    // every trial is flagged the plain median is used and the flags
-    // remain visible).
-    def spikedIdx(ts: Vector[Trial], calCounts: Boolean): Set[Int] =
-      spikeFlags(ts.map(t => (t._1, t._4._3)),
-        if (calCounts) roundCal.toSeq else Nil)
-    // (trial idx, original wall, original commit_ms, replacement wall)
-    val spikedLog = scala.collection.mutable.LinkedHashMap[String,
-      Vector[(Int, Double, Long, Option[Double])]]()
-    for ((name, _, confs, runTrial) <- rowDefs if !dead(name)) {
-      val flagged = spikedIdx(collected(name), calCounts = true)
-      for (i <- flagged.toSeq.sorted) {
-        val orig = collected(name)(i)
-        System.err.println(f"[stream] $name trial ${i + 1} flagged as spiked " +
-          f"(wall ${orig._1}%.2f s, commit ${orig._4._3} ms) — re-running once")
-        teardown()
-        val replaced =
-          try Some(withConfs(confs)(runTrial()))
-          catch { case e: Throwable =>
-            System.err.println(s"[stream] $name spike re-run failed (original kept): $e")
-            None
-          }
-        replaced.foreach(t => collected(name) = collected(name).updated(i, t))
-        spikedLog(name) = spikedLog.getOrElse(name, Vector.empty) :+
-          ((i, orig._1, orig._4._3, replaced.map(_._1)))
-        teardown()
-      }
-    }
-    // --- Evidence-clean wall-outlier pass (VERDICT r12 #1) ------------
-    // The spike pass is evidence-gated BY DESIGN (a trial is only
-    // excluded when its commit_ms or a bracketing calibration sample
-    // corroborates the eruption), which left one way for a judged
-    // artifact to publish a misleading headline with no machine-readable
-    // marker: a wall eruption with a CLEAN commit and quiet calibration
-    // (driver BENCH_r12's stream_ann trial 1 — 18.65 s = 3.5× the row
-    // min, 2.4 s commit). This pass re-runs such trials ONCE,
-    // mechanically, at a deliberately higher bar (≥3× the row min vs the
-    // spike pass's 2×) and publishes original + replacement under the
-    // DISTINCT `wall_rerun` key: the replacement enters the trial vector
-    // like any other wall (it is never excluded from median_clean — only
-    // evidence-backed flags exclude), so the evidence discipline stays
-    // honest while the artifact still self-adjudicates. A replacement
-    // that erupts again simply stays in the stats AND counts toward the
-    // row's `wall_outliers_unflagged` marker below. Drill hook
-    // (mirrors GRAFT_BENCH_FORCE_SPIKE): GRAFT_STREAM_FORCE_WALL=
-    // "<row>:<trial1based>" forces that trial into the outlier set and
-    // stamps the entry "forced":true.
-    val forceWall = sys.env.get("GRAFT_STREAM_FORCE_WALL").flatMap { s =>
-      s.split(":", 2) match {
-        case Array(n, t) if t.forall(_.isDigit) && t.nonEmpty => Some((n, t.toInt - 1))
-        case _ => None
-      }
-    }
-    val wallRerunLog = scala.collection.mutable.LinkedHashMap[String,
-      Vector[(Int, Double, Long, Option[Double], Boolean)]]()
-    for ((name, _, confs, runTrial) <- rowDefs if !dead(name)) {
-      val ts = collected(name)
-      val piped = spikedLog.getOrElse(name, Vector.empty).map(_._1).toSet
-      val forced = forceWall.collect { case (n, i) if n == name && ts.indices.contains(i) => i }
-      val outliers = (wallOutlierIdx(ts.map(_._1), piped, factor = 3.0) ++ forced).toSeq.sorted
-      for (i <- outliers) {
-        val orig = ts(i)
-        System.err.println(f"[stream] $name trial ${i + 1} is an evidence-clean wall outlier " +
-          f"(wall ${orig._1}%.2f s, commit ${orig._4._3} ms) — re-running once")
-        teardown()
-        val replaced =
-          try Some(withConfs(confs)(runTrial()))
-          catch { case e: Throwable =>
-            System.err.println(s"[stream] $name wall re-run failed (original kept): $e")
-            None
-          }
-        replaced.foreach(t => collected(name) = collected(name).updated(i, t))
-        wallRerunLog(name) = wallRerunLog.getOrElse(name, Vector.empty) :+
-          ((i, orig._1, orig._4._3, replaced.map(_._1), forced.contains(i)))
-        teardown()
-      }
     }
     val results = rowDefs.toSeq.collect { case (name, provider, _, _) if !dead(name) =>
       val ts = collected(name)
-      // Final flags: re-evaluate on the post-replacement vector WITHOUT
-      // the calibration clause (replacements ran outside the calibrated
-      // rounds); a trial whose re-run failed keeps its original flag.
-      // Exclusion is CONFINED to trials that went through the spike
-      // pipeline (flagged, re-run, published in spikedJson): the
-      // re-evaluation's row minimum may now be a fast replacement wall,
-      // and letting that re-baseline flag ORIGINAL trials would drop
-      // walls from median_clean that were never re-run and appear
-      // nowhere in the artifact — silent cherry-picking, the exact
-      // failure this pass exists to prevent. Every excluded index is
-      // therefore visible in spikedJson by construction.
-      val piped = spikedLog.getOrElse(name, Vector.empty).map(_._1).toSet
-      val rerunFailed = spikedLog.getOrElse(name, Vector.empty)
-        .collect { case (i, _, _, None) => i }.toSet
-      val flags = (spikedIdx(ts, calCounts = false) & piped) ++ rerunFailed
-      val cleanIdx = ts.indices.filterNot(flags)
-      val used = if (cleanIdx.nonEmpty) cleanIdx.map(ts(_)) else ts
       // State metrics stay per-trial (not medianed): the point is reading
       // a contended run's trials individually (VERDICT r4 #6).
       val stateJson = ts.map { case (_, _, _, (rows, mem, commitMs)) =>
         s"""{"state_rows":$rows,"state_memory_bytes":$mem,"commit_ms":$commitMs}"""
       }.mkString("[", ",", "]")
-      val spikedJson = spikedLog.getOrElse(name, Vector.empty).map {
-        case (i, w, c, repl) =>
-          s"""{"trial":${i + 1},"wall_sec":$w,"commit_ms":$c,""" +
-            s""""replacement_wall_sec":${repl.map(_.toString).getOrElse("null")}}"""
-      }.mkString("[", ",", "]")
-      val wallRerunJson = wallRerunLog.getOrElse(name, Vector.empty).map {
-        case (i, w, c, repl, drill) =>
-          s"""{"trial":${i + 1},"wall_sec":$w,"commit_ms":$c,""" +
-            s""""replacement_wall_sec":${repl.map(_.toString).getOrElse("null")}""" +
-            (if (drill) ""","forced":true""" else "") + "}"
-      }.mkString("[", ",", "]")
-      // Trials still >2× the row min in the FINAL vector with no
-      // exclusion marker — the spike pass's designed blind spot above
-      // its own threshold. Counted here (where the flag sets live) and
-      // folded into Bench's stream_round_health storm signal.
-      val wallOutliers = wallOutlierIdx(ts.map(_._1), flags, factor = 2.0).size
-      RowOut(name, medianD(used.map(_._1)), ts.map(_._1),
-        medianD(used.map(_._2)), ts.map(_._2),
-        (medianL(used.map(_._3._1)), medianL(used.map(_._3._2))),
-        provider, stateJson, spikedJson, wallRerunJson, wallOutliers)
+      RowOut(name, medianD(ts.map(_._1)), ts.map(_._1),
+        medianD(ts.map(_._2)), ts.map(_._2),
+        (medianL(ts.map(_._3._1)), medianL(ts.map(_._3._2))),
+        provider, stateJson)
     }
     val extra =
       (if (recoveryLog.isEmpty) Nil
        else Seq("stream_recovery_detail" -> recoveryLog.mkString("[", ",", "]"))) ++
       (if (rescaleLog.isEmpty) Nil
        else Seq("stream_rescale_detail" -> rescaleLog.mkString("[", ",", "]")))
-    Out(results, failed.toList.distinct, roundCal.toSeq, extra)
+    Out(results, failed.toList.distinct, extra)
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
       stagedDirs.foreach(d => deleteRecursively(new java.io.File(d)))
     }
   }
 
-  /** Pure spike predicate over one row's trials (VERDICT r10 #1b) —
-    * factored out of [[run]] so the contract is unit-testable
-    * (SpikeDetectorSpec). `trials` = (wall sec, commit ms) in round
-    * order: trial i ran in round i+1, bracketed by `roundCal` samples
-    * i and i+1. Pass `roundCal` empty to disable the calibration
-    * clause (the post-replacement re-evaluation, where replacements
-    * ran outside the calibrated rounds). A trial is spiked when its
-    * wall exceeds 2× the row's min AND either its commit_ms exceeds
-    * 2× the median over NOT-already-flagged sibling trials (the
-    * state-store/writeback stall signature; flags accumulate across
-    * passes until none is added — see the loop comment) or a
-    * bracketing round-calibration sample rose >1.5× the series median
-    * (a whole-host contention window). Single-trial rows are never
-    * flagged — there is no sibling evidence. */
-  /** Odd/even median — ONE definition for the published row medians AND
-    * the spike predicate's sibling medians (previously four inline
-    * copies whose even-length rule could silently diverge). */
+  /** Odd/even median — ONE definition for the published row medians
+    * (the stream rows here and the batch rows in Bench). */
   private[graft] def medianD(xs: Seq[Double]): Double = {
     val s = xs.sorted
     if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
@@ -1719,77 +1490,6 @@ object StreamBench {
     val s = xs.sorted
     if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
   }
-
-  private[graft] def spikeFlags(trials: Seq[(Double, Long)],
-      roundCal: Seq[(Int, Double)]): Set[Int] = {
-    val calMedian = if (roundCal.isEmpty) 0.0 else medianD(roundCal.map(_._2))
-    def calSpikeAt(i: Int): Boolean =
-      Seq(i, i + 1).flatMap(r => roundCal.find(_._1 == r)).map(_._2)
-        .exists(_ > 1.5 * calMedian)
-    spikeFlagsWith(trials, calSpikeAt)
-  }
-
-  /** The spike fixpoint with a caller-supplied calibration clause —
-    * [[spikeFlags]] passes the stream pack's per-round bracketing; the
-    * batch pack (Bench, VERDICT r11 #1) passes a uniform
-    * "either probe bracketing this QUERY rose >1.5× the series median"
-    * predicate, because its calibration probes bracket a query's whole
-    * trial block, not individual trials. Wall + commit semantics are
-    * identical in both callers by construction. */
-  private[graft] def spikeFlagsWith(trials: Seq[(Double, Long)],
-      calSpikeAt: Int => Boolean): Set[Int] =
-    if (trials.size < 2) Set.empty
-    else {
-      val minW = trials.map(_._1).min
-      // Sibling commit medians are taken over trials NOT already
-      // flagged, iterated until no NEW flag appears: with 2 of 3 trials
-      // erupted (the r10 driver run's ann row, 12.36/26.60/4.94 s
-      // walls) a one-shot median is contaminated by the OTHER spike and
-      // the second eruption escapes. Flags ACCUMULATE across passes —
-      // a trial flagged against a dirtier (higher) baseline stays
-      // flagged, which keeps the set genuinely monotone (excluding a
-      // cal-flagged LOW-commit sibling can RAISE the median, so a pure
-      // re-evaluation could oscillate and the pass cap would return a
-      // non-fixpoint set) and guarantees termination within
-      // trials.size passes.
-      var flagged = Set.empty[Int]
-      var pass = 0
-      var changed = true
-      while (changed && pass < trials.size) {
-        val next = flagged ++ trials.indices.filter { i =>
-          !flagged(i) && {
-            val sibs = trials.indices
-              .filter(j => j != i && !flagged(j)).map(j => trials(j)._2)
-            val sibMed = if (sibs.isEmpty) 0L else medianL(sibs)
-            val commitSpike = sibMed > 0 && trials(i)._2 > 2 * sibMed
-            trials(i)._1 > 2 * minW && (commitSpike || calSpikeAt(i))
-          }
-        }
-        changed = next != flagged
-        flagged = next
-        pass += 1
-      }
-      flagged
-    }
-
-  /** Pure wall-outlier predicate (VERDICT r12 #1) — indices whose wall
-    * exceeds `factor` × the row's minimum, skipping `excluded` indices
-    * (trials already carrying an evidence-backed marker). Used twice:
-    * factor 3.0 selects evidence-clean eruptions for the mechanical
-    * re-run-once pass, factor 2.0 counts surviving unmarked outliers
-    * for the health key. Single-trial rows are never outliers — the
-    * minimum IS the trial. Note the minimum is over ALL walls including
-    * excluded ones: an evidence-flagged trial's replacement is a real
-    * measurement and a legitimate baseline. Strictly `>` so a wall at
-    * exactly 2× stays in the health key's (1.5×, 2×] elevated band
-    * rather than double-counting in both. */
-  private[graft] def wallOutlierIdx(walls: Seq[Double], excluded: Set[Int],
-      factor: Double): Set[Int] =
-    if (walls.size < 2) Set.empty
-    else {
-      val minW = walls.min
-      walls.indices.filter(i => !excluded(i) && walls(i) > factor * minW).toSet
-    }
 
   /** ~distinct user_ids in the events table at bench SF — replication
     * perturbs timestamps, not the key space, so the staged replay keeps

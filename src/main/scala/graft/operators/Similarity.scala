@@ -575,13 +575,6 @@ object Similarity {
     sAnnIvfTrainedWith(s, dir, ivfCellsFor(n), ivfProbesFor(n), nCorpus = n)
   }
 
-  /** Pinned-C probe hook (CellsProbe): the same search with an explicit
-    * cell count — prices the ladder against the frozen 128-cell grid. */
-  private[graft] def sAnnIvfProbeAt(s: SparkSession, dir: String, k: Int): DataFrame = {
-    val n = corpusCount(s, dir)
-    sAnnIvfTrainedWith(s, dir, k, ivfProbesFor(n), nCorpus = n)
-  }
-
   /** `s_ann_ivf_dist` (VERDICT r10 #2): [[sAnnIvfProbe]]'s laddered
     * search over centroids from the DISTRIBUTED trainer — the registered
     * form of the escape hatch that lifts the C-ladder's 16·C driver-
@@ -1111,19 +1104,14 @@ object Similarity {
     * residual chain re-derives sample assignment, residuals, per-subspace
     * Lloyd ([[pqIterSql]]), corpus codes and the per-cell query tables —
     * both trainings in one SQL, candidates restricted to probed cells. */
-  /** Explicit-C training — the probe hook CellsProbe uses to price the
-    * C ladder against the pinned grid on replicated corpora. */
-  private[graft] def coarseArrAt(s: SparkSession, dir: String,
-      nCorpus: Long, k: Int): Array[Array[Double]] =
-    trainIvf(s, dir, k = k, nCorpus = nCorpus,
-      sampleTarget = ivfSampleTargetFor(k))
-
   private def coarseArr(s: SparkSession, dir: String,
-      nCorpus: Long): Array[Array[Double]] =
+      nCorpus: Long): Array[Array[Double]] = {
     // the coarse quantizer rides the same C → √n count ladder as
     // s_ann_ivf_probe (VERDICT r9 #1); every caller already holds the
     // corpus count for the probe/cand ladders, so no extra scan
-    coarseArrAt(s, dir, nCorpus, ivfCellsFor(nCorpus))
+    val k = ivfCellsFor(nCorpus)
+    trainIvf(s, dir, k = k, nCorpus = nCorpus, sampleTarget = ivfSampleTargetFor(k))
+  }
 
   /** Broadcast (cent_id, uc) table — `uc` is the unit centroid, the
     * residual origin for its cell. Joined 1:1 on the EXPRESSION-computed
@@ -1196,40 +1184,15 @@ object Similarity {
       books: Array[Array[Array[Double]]], coarse: Array[Array[Double]],
       probeCount: Int): DataFrame = {
     val v = vecs(s, dir).withColumn("vn", expr("transform(vd, x -> x / nrm)"))
-    adcScoredOn(s,
-      v.filter(col("vec_id") < NumQueries)
-        .select(col("vec_id").as("query_id"), col("vd").as("qd"),
-          col("nrm").as("qn"), col("vn")),
-      index, books, coarse, probeCount)
-  }
-
-  /** [[adcScored]] over an EXPLICIT query set — (query_id, qd, qn, vn)
-    * rows. CellsProbe drives this with replicated query loads to price
-    * the serving regime; the registered entries go through [[adcScored]]
-    * (the bounded vec_id < NumQueries set). */
-  private def adcScoredOn(s: SparkSession, queries: DataFrame, index: DataFrame,
-      books: Array[Array[Array[Double]]], coarse: Array[Array[Double]],
-      probeCount: Int): DataFrame = {
+    val queries = v.filter(col("vec_id") < NumQueries)
+      .select(col("vec_id").as("query_id"), col("vd").as("qd"),
+        col("nrm").as("qn"), col("vn"))
     val probes = nearestCell(s, coarse)(queries, "qd", "qn", probeCount)
       .withColumn("rn", expr("zip_with(vn, uc, (x, u) -> x - u)"))
       .select(col("query_id") +: col("cent_id") +:
         expr(dot("rn", "rn")).as("qrr") +: pqQcostCols(books, "rn"): _*)
     broadcast(probes).join(index, "cent_id")
       .withColumn("adist", expr(s"(qrr + $pqAdistExpr)"))
-  }
-
-  /** Probe hook (CellsProbe): the SERVING-phase search — ADC probe +
-    * bounded re-rank over a PREBUILT index with pre-trained artifacts and
-    * an explicit query set. This is the cost a deployment pays per query
-    * forever, after the one-time train/build the registered entries fold
-    * into their walls. `queries` must carry (query_id, qd, qn, vn). */
-  private[graft] def ivfPqServe(s: SparkSession, index: DataFrame,
-      books: Array[Array[Array[Double]]], coarse: Array[Array[Double]],
-      queries: DataFrame, probeCount: Int, cand: Int): DataFrame = {
-    val candDf = arankCandidates(
-      adcScoredOn(s, queries, index, books, coarse, probeCount), cand)
-    rankTail(candDf.join(broadcast(queries.select("query_id", "qd", "qn")), "query_id")
-      .withColumn("cosine", expr(s"${dot("qd", "vd")} / (qn * nrm)")))
   }
 
   /** Test hook: raw per-cell ADC scores (query_id, cent_id, neighbor_id,
@@ -1267,15 +1230,6 @@ object Similarity {
       coarse, ivfProbesFor(n), pqCandFor(n))
   }
 
-  /** Pinned-C probe hook (CellsProbe) — [[sAnnIvfPq]] at an explicit C. */
-  private[graft] def sAnnIvfPqAt(s: SparkSession, dir: String, k: Int): DataFrame = {
-    val n = corpusCount(s, dir)
-    val coarse = coarseArrAt(s, dir, n, k)
-    val books = trainPqResidual(s, dir, coarse, n)
-    ivfPqSearchWith(s, dir, buildIvfPqIndexWith(s, dir, books, coarse), books,
-      coarse, ivfProbesFor(n), pqCandFor(n))
-  }
-
   /** Streaming-search support (StreamBench's stream_ann row): the
     * per-(query, probed-cell) ADC probe rows in wire form —
     * (query_id, cent_id, payload) where payload = ‖q_res‖² followed by
@@ -1303,21 +1257,7 @@ object Similarity {
   }
 
   // ------------------------------------------------------------ p_ann_search
-  /** The index LIFECYCLE under the oracle gate (VERDICT r6 #5): build the
-    * residual IVF-PQ index, WRITE it to parquet `partitionBy(cent_id)` —
-    * the layout a deployment materializes, where a probe's cell list
-    * prunes whole files before any row is read — then read it back and
-    * serve the search from the files. The result must equal the inline
-    * [[sAnnIvfPq]] bit-for-bit, so it shares its oracle SQL: what the
-    * gate certifies every round is that NOTHING about the on-disk
-    * round-trip (column reordering, partition-column re-typing,
-    * file-split planning) perturbs the search. */
-  def pAnnSearch(s: SparkSession, dir: String): DataFrame = {
-    val n = corpusCount(s, dir)
-    pAnnSearchWith(s, dir, n, coarseArr(s, dir, n))
-  }
-
-  /** Staging-generation counters for [[pAnnSearchWith]], one per staging
+  /** Staging-generation counters for [[pAnnSearch]], one per staging
     * base (≈ per sfDir): the g−2 sliding-window cleanup below is only
     * safe if generation numbers advance per base. A JVM-global counter
     * let two interleaved sfDirs (A=g1, B=g2, A=g3) delete A_g1 — the dir
@@ -1333,20 +1273,23 @@ object Similarity {
     ()
   }
 
-  /** Pinned-C probe hook (CellsProbe) — the index lifecycle at an
-    * explicit C. */
-  private[graft] def pAnnSearchAt(s: SparkSession, dir: String, k: Int): DataFrame = {
+  /** The index LIFECYCLE under the oracle gate (VERDICT r6 #5): build the
+    * residual IVF-PQ index, WRITE it to parquet `partitionBy(cent_id)` —
+    * the layout a deployment materializes, where a probe's cell list
+    * prunes whole files before any row is read — then read it back and
+    * serve the search from the files. The result must equal the inline
+    * [[sAnnIvfPq]] bit-for-bit, so it shares its oracle SQL: what the
+    * gate certifies every round is that NOTHING about the on-disk
+    * round-trip (column reordering, partition-column re-typing,
+    * file-split planning) perturbs the search. */
+  def pAnnSearch(s: SparkSession, dir: String): DataFrame = {
     val n = corpusCount(s, dir)
-    pAnnSearchWith(s, dir, n, coarseArrAt(s, dir, n, k))
-  }
-
-  private def pAnnSearchWith(s: SparkSession, dir: String, n: Long,
-      coarse: Array[Array[Double]]): DataFrame = {
+    val coarse = coarseArr(s, dir, n)
     val books = trainPqResidual(s, dir, coarse, n)
     // per-call GENERATION suffix under a per-(sfDir, pid) base: the old
     // fixed per-(sfDir, JVM) path was overwrite-in-place, so a second
-    // same-JVM invocation (parallel test runner, pinned-C probe beside
-    // the registered entry) could delete part-files a still-lazy earlier
+    // same-JVM invocation (parallel test runner, a repeat of the
+    // registered entry) could delete part-files a still-lazy earlier
     // plan was reading. Generations never collide; the sliding-window
     // cleanup below deletes generation g−2 — older than the PREVIOUS
     // call, so the serial Verify/Bench repeat pattern holds at ≤2 dirs
@@ -1801,7 +1744,7 @@ object Similarity {
     // construction). One count, one scaled coarse training; per-variant
     // plans and results unchanged.
     val n = corpusCount(s, dir)
-    val coarseScaled = coarseArrAt(s, dir, n, ivfCellsFor(n))
+    val coarseScaled = coarseArr(s, dir, n)
     val resBooks = trainPqResidual(s, dir, coarseScaled, n)
     val ivfpq = ivfPqSearchWith(s, dir,
       buildIvfPqIndexWith(s, dir, resBooks, coarseScaled),
@@ -2031,8 +1974,8 @@ object Similarity {
     * Janino method limits; the matrix expression keeps the identical
     * zero-shuffle plan and bit-identical scores while eval suites of
     * 10³–10⁵ prompts ride one O(E·dim) compiled loop per corpus row —
-    * DecontamProbe measures it linear at 10⁴ eval rows, where the
-    * literal form could not even compile. */
+    * measured linear at 10⁴ eval rows (SCALING.md), where the literal
+    * form could not even compile. */
   def dDecontaminateSemanticWith(corpus: DataFrame, evals: DataFrame,
       threshold: Double): DataFrame = {
     val evalRows = evals

@@ -2,277 +2,68 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The mechanized committed-run selection (VERDICT r13 #1; metric and
-  * tie-break re-pinned r15 per VERDICT r14 #1/#3): the rule the builder
-  * previously applied by hand — and the severity grading and
-  * normalization it consumes — as pure, pinned functions. A change here
-  * changes WHICH run gets committed every round, so every clause has a
-  * vector. */
+/** The mechanized committed-run selection (VERDICT r13 #1): one rule —
+  * among non-failed full runs whose recorded `cpus` equals the host's
+  * default, the lowest batch+stream total wins, ties to the earliest
+  * run — as pure, pinned functions. A change here changes WHICH run gets
+  * committed every round, so every clause has a vector. */
 class BenchSelectionSpec extends AnyFunSuite {
-  import Bench.{MaxSplitHostDiscount, RunCand, SplitMetricVersion,
-    SplitRefCalSec, StreamWallBound, WireBarRefCalSec, WireBarRps,
-    gradeRank, jsonField, parseCand, runsMarkdown, selectCommitted,
-    splitNormalizedTotal, wireBarPasses, wireHostNormalizedRps}
+  import Bench.{RunCand, jsonField, parseCand, runsMarkdown, selectCommitted}
 
-  test("grade ranking: clean < turbulent < storm < failed/unknown") {
-    assert(Seq("clean", "turbulent", "storm", "failed").map(gradeRank) === Seq(0, 1, 2, 3))
-    assert(gradeRank("gibberish") === 3)
+  /** A run record shaped as Bench logs it to bench_runs.jsonl. */
+  private def record(seq: Int, cpus: Option[Int], total: Double,
+      failedRows: Int = 0): String =
+    s"""{"seq":$seq,"ts":"2026-08-18T06:12:34Z",""" +
+      cpus.fold("")(c => s""""cpus":$c,""") +
+      s""""total_raw_sec":$total,"batch_total_sec":${total / 2},""" +
+      s""""stream_total_sec":${total / 2},"failed_rows":$failedRows,""" +
+      s""""repeats":3,"wire_rps":1020996,"wire_standalone_rps":1033050,""" +
+      s""""wire_bar_pass":true,"out":"bench_out.json.run$seq"}"""
+
+  /** r18's four closing runs (bench_runs.md), totals as logged. Runs 1-3
+    * ran at the host default of 32 cores; run 4 was an 8-core
+    * run, which r18's grade-and-calibration rule committed. */
+  private val r18 = Seq(
+    record(1, Some(32), 201.362107),
+    record(2, Some(32), 210.37799030999997),
+    record(3, Some(32), 220.859667544),
+    record(4, Some(8), 244.236273241))
+
+  private def pick(records: Seq[String], hostCpus: Int = 32): Option[Int] =
+    selectCommitted(records.flatMap(parseCand), hostCpus).map(_.seq)
+
+  test("the r18 run records with cpus: run 1 is chosen, the 8-core run 4 never is") {
+    assert(pick(r18) === Some(1))
+    // run 4 loses on its core count, not on its time: not as the
+    // fastest run, and not as the only run
+    val fastRun4 = record(4, Some(8), 100.0)
+    assert(pick(r18.init :+ fastRun4) === Some(1))
+    assert(pick(Seq(fastRun4)) === None)
+    // on an 8-core host only run 4 ran at the default
+    assert(pick(r18, hostCpus = 8) === Some(4))
   }
 
-  test("a clean run beats a faster stormy run — evidence outranks speed") {
-    val storm = RunCand(1, "storm", 100.0, barPass = true, "a")
-    val clean = RunCand(2, "clean", 180.0, barPass = false, "b")
-    assert(selectCommitted(Seq(storm, clean)).map(_.seq) === Some(2))
-  }
-
-  test("within a grade, a wire-bar-passing run beats a faster bar-missing one") {
-    // the exact r14 failure (VERDICT r14 what's-wrong #1): the committed
-    // run missed the published ≥900 K bar while four peers passed it —
-    // the bar is a tie-break AFTER grade, BEFORE total
-    val miss = RunCand(3, "turbulent", 451.6, barPass = false, "r3")
-    val pass = RunCand(4, "turbulent", 488.5, barPass = true, "r4")
-    assert(selectCommitted(Seq(miss, pass)).map(_.seq) === Some(4))
-    // but never across grades: a bar-passing storm loses to a bar-missing clean
-    val cleanMiss = RunCand(5, "clean", 500.0, barPass = false, "r5")
-    val stormPass = RunCand(6, "storm", 400.0, barPass = true, "r6")
-    assert(selectCommitted(Seq(cleanMiss, stormPass)).map(_.seq) === Some(5))
-  }
-
-  test("within grade and bar, lowest split-normalized total wins") {
-    val a = RunCand(1, "turbulent", 250.0, barPass = true, "a")
-    val b = RunCand(2, "turbulent", 238.0, barPass = true, "b")
-    val c = RunCand(3, "turbulent", 309.0, barPass = true, "c")
-    assert(selectCommitted(Seq(a, b, c)).map(_.seq) === Some(2))
-  }
-
-  test("ties break to the earliest run (stable as candidates append)") {
-    val a = RunCand(1, "clean", 100.0, barPass = true, "a")
-    val b = RunCand(2, "clean", 100.0, barPass = true, "b")
-    assert(selectCommitted(Seq(b, a)).map(_.seq) === Some(1))
-  }
-
-  test("slow host must not win: wall-bound seconds do not scale with the host") {
-    // Two runs of identical code. Quiet host at the anchor calibration:
-    // 30 s wall-bound + 100 s CPU-bound. Slow host (cal 2x anchor): the
-    // CPU-bound half doubles to 200 s, the wall-bound half is machinery-
-    // paced and stays 30 s. The OLD whole-run metric scaled everything by
-    // refCal/cal and ranked the slow host BETTER (115 < 130) — the exact
-    // r14 failure (run 8, cal 0.487, lowest normalized total of the
-    // round). The r16 metric gives the slow host NO discount at all
-    // (MaxSplitHostDiscount = 1.0): it ranks on raw seconds, behind the
-    // quiet host — committing the quiet-host artifact is the point.
-    val refCal = SplitRefCalSec
-    val fast = splitNormalizedTotal(30.0, 100.0, refCal, refCal)
-    val slow = splitNormalizedTotal(30.0, 200.0, 2 * refCal, refCal)
-    assert(fast === 130.0)
-    assert(slow === 230.0, "slower-than-anchor hosts rank on raw seconds")
-    val oldFast = (30.0 + 100.0) * (refCal / refCal)
-    val oldSlow = (30.0 + 200.0) * (refCal / (2 * refCal))
-    assert(oldSlow < oldFast, "the vector must reproduce the old metric's bias")
-    // a FASTER-than-anchor host normalizes UP (its advantage is removed —
-    // the conservative direction stays uncapped)
-    assert(splitNormalizedTotal(30.0, 50.0, refCal / 2, refCal) === 130.0)
-    // degenerate calibration (no probes) falls back to raw seconds
-    assert(splitNormalizedTotal(30.0, 100.0, 0.0, refCal) === 130.0)
-  }
-
-  test("the r16 discount floor: a slow-host bar-passer cannot out-rank a " +
-      "quiet-host bar-passer with lower raw total (VERDICT r15 #2)") {
-    // The r15 table's own profiles, promoted to both-bar-passing: run 8
-    // (cal 0.424 — the kernel claims a 1.57x-slow host) had CPU-bound
-    // raw 176.8 s vs clean run 4's 171.1 s (cal 0.352) — the pack ran
-    // only ~3% slower while the calibration kernel claimed 20%+
-    // (SCALING.md r16: the kernel exaggerates the host ratio). Under the
-    // verdict's sketched 1.5x cap the slow run STILL posts the lower
-    // split total; the shipped floor (no slow-host discount) ranks the
-    // quiet run first.
-    assert(SplitRefCalSec === 0.27)
-    assert(MaxSplitHostDiscount === 1.0)
-    val slowWall = 44.9; val slowCpu = 176.8; val slowCal = 0.4236
-    val quietWall = 46.3; val quietCpu = 171.1; val quietCal = 0.3519
-    // the sketched 1.5x cap would NOT have fixed the ranking:
-    val sketchSlow = slowWall + slowCpu *
-      math.max(SplitRefCalSec / slowCal, 1.0 / 1.5)
-    val sketchQuiet = quietWall + quietCpu *
-      math.max(SplitRefCalSec / quietCal, 1.0 / 1.5)
-    assert(sketchSlow < sketchQuiet,
-      "vector must reproduce why the 1.5x sketch is insufficient")
-    // the shipped metric ranks the quiet host first:
-    val slow = splitNormalizedTotal(slowWall, slowCpu, slowCal, SplitRefCalSec)
-    val quiet = splitNormalizedTotal(quietWall, quietCpu, quietCal, SplitRefCalSec)
-    assert(quiet < slow, s"quiet=$quiet must out-rank slow=$slow")
-    val slowCand = RunCand(8, "turbulent", slow, barPass = true, "r8")
-    val quietCand = RunCand(4, "turbulent", quiet, barPass = true, "r4")
-    assert(selectCommitted(Seq(slowCand, quietCand)).map(_.seq) === Some(4))
-  }
-
-  test("the r15 closing table replayed under the r16 metric: run 4 still wins") {
-    // The eight r15 candidates (bench_runs.jsonl values; grades and bar
-    // verdicts as logged). Run 4 was the round's only CLEAN run, so the
-    // grade gate decides regardless of how the metric change moves the
-    // split totals — exactly the property the replay pins (VERDICT r15
-    // #2's done-bar). Run 8 (the driver's 1.57x-claimed-slow host)
-    // carried the table's LOWEST v2 split total AND a bar miss; under
-    // the r16 metric its total is its raw seconds, no longer the lowest.
-    val r15 = Seq(
-      RunCand(1, "turbulent", 481.2, barPass = true, "r1", version = 2),
-      RunCand(2, "turbulent", 492.7, barPass = true, "r2", version = 2),
-      RunCand(3, "storm", 511.7, barPass = true, "r3", version = 2),
-      RunCand(4, "clean", 498.6, barPass = true, "r4", version = 2),
-      RunCand(5, "storm", 511.0, barPass = false, "r5", version = 2),
-      RunCand(6, "turbulent", 502.3, barPass = true, "r6", version = 2),
-      RunCand(7, "storm", 554.5, barPass = true, "r7", version = 2),
-      RunCand(8, "turbulent", 433.1, barPass = false, "r8", version = 2))
-    assert(selectCommitted(r15).map(_.seq) === Some(4))
-    // and with no clean run in the table (drop run 4), the bar tie-break
-    // keeps the bar-missing slow host out among the turbulent peers
-    assert(selectCommitted(r15.filterNot(_.seq == 4)).map(_.seq) === Some(1))
-  }
-
-  test("selection ranks only within the newest metric version present (ADVICE r15)") {
-    // v2 split totals and v3 split totals are different scales (v2
-    // discounts slow hosts against refCal 0.93 — systematically smaller
-    // numbers on slow-host runs); a stale log line must not win on its
-    // incomparable metric. The v2 candidate's 300.0 would beat both v3
-    // candidates numerically — it is excluded from ranking instead.
-    val mixed = Seq(
-      RunCand(1, "clean", 300.0, barPass = true, "r1", version = 2),
-      RunCand(2, "turbulent", 480.0, barPass = true, "r2", version = 3),
-      RunCand(3, "turbulent", 460.0, barPass = true, "r3", version = 3))
-    assert(selectCommitted(mixed).map(_.seq) === Some(3))
-    // a uniform-version log ranks normally
-    assert(selectCommitted(mixed.map(_.copy(version = 2))).map(_.seq) === Some(1))
-    assert(SplitMetricVersion === 3)
-  }
-
-  test("the wire bar evaluation is pinned: either raw or host-normalized clears 900K") {
-    // the anchor is the quiet-host stream-round calibration the bar and
-    // the 1.03-1.16M band were measured at (SCALING.md r15: ref_cal_sec's
-    // 0.93 idle-r4 anchor would normalize every modern reading to ~330K)
-    assert(WireBarRefCalSec === 0.27)
-    assert(WireBarRps === 900000.0)
-    // r14 run 4's committed-shape vector: quiet host, raw passes alone
-    assert(wireBarPasses(1045492, 0.256))
-    // r14 run 8's vector: slow host (stream cal 0.396), raw 898K misses
-    // but host-normalized 1.32M passes — the self-explaining stamp
-    assert(!(898000.0 >= WireBarRps))
-    assert(wireBarPasses(898000, 0.396))
-    assert(wireHostNormalizedRps(898000, 0.396) > WireBarRps)
-    // r14 run 3's vector (the round's committed miss): 783K at stream
-    // cal 0.261 — quiet window, the miss was a trial eruption, so the
-    // normalization must NOT rescue it
-    assert(!wireBarPasses(783495, 0.261))
-    // a quiet host slightly under the anchor is not punished into a miss
-    assert(wireBarPasses(1030000, 0.251))
-    // degenerate calibration: raw reading stands
-    assert(wireHostNormalizedRps(950000, 0.0) === 950000.0)
-    assert(wireBarPasses(950000, 0.0))
-    // the slow-host credit is CAPPED at 1.5x: a uniformly slow host
-    // (flat cal — invisible to the window-based storm clause) must not
-    // rescue a genuinely bad reading with an unbounded extrapolation
-    assert(wireHostNormalizedRps(700000, 0.81) === 700000.0 * 1.5)
-    assert(!wireBarPasses(500000, 0.81))
-    // a fast host reads DOWN uncapped (conservative direction)
-    assert(wireHostNormalizedRps(1200000, 0.135) === 600000.0)
-  }
-
-  test("the stream wall-bound tag set is pinned — membership moves committed runs") {
-    // structural rationale + r14 cross-host evidence (corr(wall, cal)
-    // -0.09..0.14 across eight runs vs 0.61-0.94 for every CPU row) in
-    // Bench.StreamWallBound's scaladoc and SCALING.md r15
-    assert(StreamWallBound === Set("stream_market_spread_wire",
-      "stream_recovery", "stream_two_stage", "stream_topk"))
-  }
-
-  test("the r14 closing table under the r15 rule: run 4 (bar-passing) is committed") {
-    // The eight r14 candidates with split-normalized totals recomputed
-    // from the preserved bench_out.json.run1-8 artifacts (SCALING.md r15
-    // replay table). r14's shipped rule committed run 3 — a bar-missing
-    // run (783 K standalone wire) over four bar-passing peers, because
-    // the whole-run metric was blind to the bar. Under the r15 rule the
-    // storm/failed runs stay excluded by grade, run 3 loses the bar
-    // tie-break, and run 4 (1.045 M standalone, lowest bar-passing split
-    // total among turbulent runs) is committed.
-    val r14 = Seq(
-      RunCand(1, "failed", 520.8, barPass = false, "r1"),
-      RunCand(2, "storm", 517.7, barPass = true, "r2"),
-      RunCand(3, "turbulent", 451.6, barPass = false, "r3"),
-      RunCand(4, "turbulent", 488.5, barPass = true, "r4"),
-      RunCand(5, "failed", 494.1, barPass = true, "r5"),
-      RunCand(6, "failed", 495.8, barPass = true, "r6"),
-      RunCand(7, "turbulent", 507.0, barPass = true, "r7"),
-      RunCand(8, "storm", 413.2, barPass = true, "r8"))
-    assert(selectCommitted(r14).map(_.seq) === Some(4))
+  test("a record without cpus is not a candidate") {
+    val legacy = record(5, None, 100.0)
+    assert(parseCand(legacy).map(_.cpus) === Some(None))
+    assert(pick(r18 :+ legacy) === Some(1))
+    assert(pick(Seq(legacy)) === None)
   }
 
   test("a failed run is never preferred over any graded run") {
-    val failedRun = RunCand(1, "failed", 50.0, barPass = true, "a")
-    val storm = RunCand(2, "storm", 500.0, barPass = false, "b")
-    assert(selectCommitted(Seq(failedRun, storm)).map(_.seq) === Some(2))
-    // ...even when the failed run's calibration is the round's best and
-    // everyone else misses the gate (the gate must not resurrect it)
-    val hotStorm = RunCand(3, "storm", 500.0, barPass = false, "c",
-      calMedian = 0.60)
-    val failedQuiet = failedRun.copy(calMedian = 0.30)
-    assert(selectCommitted(Seq(failedQuiet, hotStorm)).map(_.seq) === Some(3))
+    val failedFast = record(5, Some(32), 100.0, failedRows = 1)
+    assert(pick(r18 :+ failedFast) === Some(1))
+    assert(pick(Seq(failedFast)) === None)
   }
 
-  test("the r18 calibration gate outranks grade (VERDICT r17 next #4)") {
-    assert(Bench.CalGateFactor === 1.2)
-    // the exact r17 inversion: a turbulent run on the round's SLOWEST
-    // host (cal 1.42x the best) must no longer beat storm-graded runs on
-    // quiet hosts whose spikes were re-run clean
-    val quietStorm = RunCand(4, "storm", 199.1, barPass = true, "r4",
-      calMedian = 0.3675)
-    val hotTurbulent = RunCand(6, "turbulent", 220.2, barPass = true, "r6",
-      calMedian = 0.4526)
-    assert(selectCommitted(Seq(quietStorm, hotTurbulent)).map(_.seq) === Some(4))
-    // within the gate, grade still decides: a clean in-gate run beats a
-    // faster storm in-gate run
-    val inGateClean = RunCand(7, "clean", 230.0, barPass = true, "r7",
-      calMedian = 0.35)
-    assert(selectCommitted(Seq(quietStorm, inGateClean)).map(_.seq) === Some(7))
-    // legacy records without the field neither set nor miss the gate
-    val legacy = RunCand(8, "clean", 260.0, barPass = true, "r8")
-    assert(selectCommitted(Seq(quietStorm, legacy)).map(_.seq) === Some(8))
+  test("ties break to the earliest run (stable as candidates append)") {
+    val a = RunCand(1, Some(32), 100.0, failed = false, "a")
+    val b = RunCand(2, Some(32), 100.0, failed = false, "b")
+    assert(selectCommitted(Seq(b, a), 32).map(_.seq) === Some(1))
   }
 
-  test("surviving unmarked wall outliers demote a run within its gate+grade") {
-    // wall_outliers > 0 = readings >2x the row min that NO mechanism
-    // repaired or excluded — a run carrying them loses to an
-    // outlier-free peer even with a lower split total
-    val outliery = RunCand(5, "storm", 215.9, barPass = true, "r5",
-      calMedian = 0.3385, wallOutliers = 2)
-    val outlierFree = RunCand(1, "storm", 221.1, barPass = true, "r1",
-      calMedian = 0.3191)
-    assert(selectCommitted(Seq(outliery, outlierFree)).map(_.seq) === Some(1))
-  }
-
-  test("the r17 closing table replayed under the r18 rule: run 4, not run 6") {
-    // The seven r17 candidates exactly as logged (bench_runs.jsonl r17:
-    // grade, cal_median_sec, wall_outliers, wire_bar_pass,
-    // normalized_split_sec). The shipped r17 rule committed run 6 — the
-    // driver's own run on the round's slowest host (cal 0.4526 = 1.42x
-    // run 1's 0.3191) — because `turbulent` beat five storm grades; the
-    // verdict's audit showed the committed artifact under-stated the
-    // build (batch 124.6 s vs run 4's 107.5). Under the r18 rule the
-    // calibration gate (1.2x best = 0.3829) puts runs 2/6/7 behind runs
-    // 1/3/4/5; runs 3/5 carry surviving wall outliers; run 4 beats
-    // run 1 on split total. The verdict's done-bar: "the rule should
-    // pick run 4 or run 1, not run 6".
-    val r17 = Seq(
-      RunCand(1, "storm", 221.114, barPass = true, "run1", calMedian = 0.3191),
-      RunCand(2, "storm", 203.070, barPass = true, "run2", calMedian = 0.3981),
-      RunCand(3, "storm", 210.224, barPass = true, "run3", calMedian = 0.3743,
-        wallOutliers = 2),
-      RunCand(4, "storm", 199.054, barPass = true, "run4", calMedian = 0.3675),
-      RunCand(5, "storm", 215.880, barPass = true, "run5", calMedian = 0.3385,
-        wallOutliers = 2),
-      RunCand(6, "turbulent", 220.164, barPass = true, "run6", calMedian = 0.4526),
-      RunCand(7, "storm", 226.234, barPass = false, "run7", calMedian = 0.4076))
-    assert(selectCommitted(r17).map(_.seq) === Some(4))
-    // without run 4, run 1 (the other verdict-named choice) wins
-    assert(selectCommitted(r17.filterNot(_.seq == 4)).map(_.seq) === Some(1))
+  test("empty candidate list selects nothing") {
+    assert(selectCommitted(Nil, 32).isEmpty)
   }
 
   test("the compact stdout line is a parseable '{'-line carrying the contract") {
@@ -305,74 +96,33 @@ class BenchSelectionSpec extends AnyFunSuite {
     assert(sub.contains(""""subset":["q1_agg"]"""))
   }
 
-  test("the wire deployment cal gate is pinned at the quiet-host band edge") {
-    // 0.25-0.28 is the band the bar and the deployment number were
-    // measured at (WireBarRefCalSec 0.27); 0.30 admits normal jitter and
-    // rejects the r17 storm windows (0.34-0.45)
-    assert(Bench.WireDeploymentCalGateSec === 0.30)
-  }
-
-  test("empty candidate list selects nothing") {
-    assert(selectCommitted(Nil).isEmpty)
-  }
-
-  private val cand =
-    """{"seq":3,"ts":"2026-08-16T05:00:00Z","grade":"turbulent",""" +
-      """"total_raw_sec":125.4,"batch_total_sec":105.1,"stream_total_sec":20.3,""" +
-      """"cal_median_sec":0.391,"normalized_total_sec":298.2,""" +
-      """"normalized_split_sec":280.4,"stream_wall_bound_sec":24.7,""" +
-      """"spiked_rows":0,""" +
-      """"wall_outliers":0,"elevated_trials":2,"failed_rows":0,"repeats":3,""" +
-      """"wire_rps":1157000,"wire_standalone_rps":1030000,""" +
-      """"wire_bar_pass":true,"out":"bench_out.json.run3"}"""
-
   test("candidate records round-trip through the flat-field parser") {
-    // no explicit metric_version + usable split field = r15's v2
-    val p = parseCand(cand)
-    assert(p === Some(RunCand(3, "turbulent", 280.4, barPass = true,
-      "bench_out.json.run3", version = 2, calMedian = 0.391,
-      wallOutliers = 0)))
-    // an r16 record carries the explicit tag
-    val v3 = cand.replace(""""grade":"turbulent",""",
-      """"grade":"turbulent","metric_version":3,""")
-    assert(parseCand(v3).map(_.version) === Some(3))
+    assert(parseCand(r18.head) === Some(RunCand(1, Some(32), 201.362107,
+      failed = false, "bench_out.json.run1")))
+    // a record as r18 logged it (no cpus field) still parses
+    val logged =
+      """{"seq":4,"ts":"2026-08-18T11:37:04.631278205Z","grade":"storm",""" +
+        """"metric_version":3,"total_raw_sec":244.236273241,""" +
+        """"batch_total_sec":120.675173563,"stream_total_sec":123.561099678,""" +
+        """"wall_outliers":0,"failed_rows":0,"repeats":3,"wire_rps":703893,""" +
+        """"wire_standalone_rps":580304,"wire_bar_pass":false,""" +
+        """"out":"bench_out.json.run4"}"""
+    assert(parseCand(logged) === Some(RunCand(4, None, 244.236273241,
+      failed = false, "bench_out.json.run4")))
     // field extraction is exact-key (quoted), not substring: "out" must
     // not match inside "wall_outliers"
-    assert(jsonField(cand, "out") === Some("bench_out.json.run3"))
-    assert(jsonField(cand, "wire_standalone_rps") === Some("1030000"))
-    assert(jsonField(cand, "wire_bar_pass") === Some("true"))
-    assert(jsonField(cand, "no_such_key").isEmpty)
+    assert(jsonField(logged, "out") === Some("bench_out.json.run4"))
+    assert(jsonField(logged, "wire_standalone_rps") === Some("580304"))
+    assert(jsonField(logged, "no_such_key").isEmpty)
     assert(parseCand("{\"not\":\"a candidate\"}").isEmpty)
   }
 
-  test("pre-r15 candidate records still parse: split falls back to whole-run") {
-    // r14 logs carry normalized_total_sec only (or a transitional 0 in
-    // normalized_split_sec) and no wire_bar_pass — they must parse with
-    // the whole-run metric and bar-miss, not be dropped
-    val old = cand.replace(""""normalized_split_sec":280.4,""", "")
-      .replace(""""wire_bar_pass":true,""", "")
-    assert(parseCand(old) === Some(RunCand(3, "turbulent", 298.2,
-      barPass = false, "bench_out.json.run3", version = 1,
-      calMedian = 0.391, wallOutliers = 0)))
-    val zeroSplit = cand.replace(""""normalized_split_sec":280.4""",
-      """"normalized_split_sec":0""")
-    assert(parseCand(zeroSplit).map(_.normalizedSplit) === Some(298.2))
-    assert(parseCand(zeroSplit).map(_.version) === Some(1))
-  }
-
   test("the generated run table marks the chosen run and carries every candidate") {
-    val c2 = cand.replace("\"seq\":3", "\"seq\":4")
-      .replace("280.4", "240.1").replace("turbulent", "clean")
-    val md = runsMarkdown(Seq(cand, c2), chosenSeq = 4)
-    assert(md.contains("**4 (committed)**"))
-    assert(md.contains("| 3 | turbulent |"))
-    assert(md.contains("240.1"))
-    assert(md.contains("| pass |"))
-    // the dead v1 metric must name itself (VERDICT r16 next #5: a storm
-    // run can post the lowest value in that column — readers must not
-    // mistake it for the selection metric)
-    assert(md.contains("legacy normalized"))
-    assert(md.contains("not used for selection"))
-    assert(md.linesIterator.count(_.startsWith("|")) === 4) // header+sep+2 rows
+    val md = runsMarkdown(r18, Some(1), hostCpus = 32)
+    assert(md.contains("| **1 (committed)** | 32 | 201.4 |"))
+    assert(md.contains("| 4 | 8 | 244.2 |"))
+    assert(md.contains(Bench.SelectionRule))
+    assert(md.linesIterator.count(_.startsWith("|")) === 6) // header+sep+4 rows
+    assert(!runsMarkdown(r18, None, hostCpus = 32).contains("(committed)"))
   }
 }
